@@ -17,6 +17,10 @@ Runs the headline queries from ``__spark_entry__`` at
   spread (JVM warm-up excluded by a warm-up pass over the flagship query);
   queries whose runs spread >1.5x are automatically re-measured so one
   noisy run cannot define the reported number.
+- Every run clears the cache, rebuilds the query and forces it; the
+  detail map records plan build (``build_s``) and execution (``exec_s``)
+  apart, so a query that runs Spark jobs while it is built is timed in
+  full.
 """
 
 from __future__ import annotations
@@ -70,8 +74,8 @@ def ensure_images(spark, n: int = IMAGES_BENCH_N) -> str:
 
     path = os.path.join(IMAGES_CACHE, f"images_n{n}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        # one file per decode work unit (files_per_task=1 in the direct
-        # reader); ~6k rows/file keeps units balanced at both core counts
+        # one file per decode work unit in the direct reader; ~6k
+        # rows/file keeps units balanced at both core counts
         files = max(64, n // 6250)
         synth.generate_spark(spark, n, seed=42, partitions=files).write.mode(
             "overwrite"
@@ -339,60 +343,45 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def time_executions(df, runs: int) -> list[float]:
-    ts = []
+def time_runs(spark, build, runs: int) -> list[tuple[float, float]]:
+    """``(build_s, exec_s)`` per run. Every run clears the cache, rebuilds
+    the query and forces it, so work a query does while it is built
+    (eager scalar passes, cache fills, driver-side profiling, stream
+    drains) is timed like the execution of its plan, and no run reads a
+    cache an earlier run filled."""
+    out = []
     for _ in range(max(runs, 1)):
+        spark.catalog.clearCache()
         t0 = time.perf_counter()
+        df = build()
+        t1 = time.perf_counter()
         force(df)
-        ts.append(time.perf_counter() - t0)
-    return ts
+        out.append((t1 - t0, time.perf_counter() - t1))
+    return out
 
 
-def time_callable(run_once, runs: int) -> list[float]:
-    ts = []
-    for _ in range(max(runs, 1)):
-        t0 = time.perf_counter()
-        run_once()
-        ts.append(time.perf_counter() - t0)
-    return ts
-
-
-def _median_with_spread(ts: list[float], retime) -> tuple[float, dict]:
-    import statistics
-
-    if len(ts) > 1 and min(ts) > 0 and max(ts) / min(ts) > 1.5:
-        ts += retime(2)
-    return (
-        round(statistics.median(ts), 4),
-        {
-            "min": round(min(ts), 4),
-            "max": round(max(ts), 4),
-            "n": len(ts),
-        },
-    )
-
-
-def measure(df, runs: int) -> tuple[float, dict]:
+def time_query(spark, build, runs: int) -> dict:
     """Median-of-N timing with spread reporting (bench hygiene: BENCH_r02's
     1.6-1.9x phantom regressions on sub-second queries were best-of-2 noise).
     If the spread across the first N runs exceeds 1.5x, the query is
-    re-measured with two extra runs and the median is taken over all of
-    them — a single noisy run can no longer define the reported number."""
-    return _median_with_spread(
-        time_executions(df, runs), lambda n: time_executions(df, n)
-    )
+    re-timed with two extra runs and the medians are taken over all of
+    them — a single noisy run can no longer define the reported number.
+    ``sec`` is the median of build + exec per run."""
+    import statistics
 
-
-def measure_callable(run_once, runs: int) -> tuple[float, dict]:
-    """measure() for queries that execute work during PLAN BUILD (eager
-    scalar passes, snapshot-table construction): each timed run rebuilds
-    the plan and forces it, so the build-time jobs are inside the timed
-    region. Slightly overcounts (plan analysis is re-timed per run) —
-    stated in BASELINE.md; the alternative silently undercounts by the
-    whole build-time execution."""
-    return _median_with_spread(
-        time_callable(run_once, runs), lambda n: time_callable(run_once, n)
-    )
+    ts = time_runs(spark, build, runs)
+    totals = [b + e for b, e in ts]
+    if len(ts) > 1 and min(totals) > 0 and max(totals) / min(totals) > 1.5:
+        ts += time_runs(spark, build, 2)
+        totals = [b + e for b, e in ts]
+    return {
+        "sec": round(statistics.median(totals), 4),
+        "build_s": round(statistics.median(b for b, _ in ts), 4),
+        "exec_s": round(statistics.median(e for _, e in ts), 4),
+        "min": round(min(totals), 4),
+        "max": round(max(totals), 4),
+        "n": len(ts),
+    }
 
 
 def bench_ref_skew(spark, n: int = 2_000_000, runs: int = 3) -> dict:
@@ -402,8 +391,6 @@ def bench_ref_skew(spark, n: int = 2_000_000, runs: int = 3) -> dict:
     the timing AND whether the executed plan engaged the skew split —
     the north rule's skew story for joins (aggregation is covered by the
     salted uniqueness path)."""
-    import statistics
-
     from pyspark.sql import functions as F
 
     from jsonschema_validator_spark.operators.referential import orphan_rows
@@ -436,18 +423,20 @@ def bench_ref_skew(spark, n: int = 2_000_000, runs: int = 3) -> dict:
     for k, v in overrides.items():
         spark.conf.set(k, v)
     try:
-        out = orphan_rows(fact, dim, [("c_nationkey", "n_nationkey")], broadcast=False)
-        ts = []
-        for _ in range(max(runs, 1)):
-            t0 = time.perf_counter()
-            out.write.format("noop").mode("overwrite").save()
-            ts.append(time.perf_counter() - t0)
+
+        def build():
+            return orphan_rows(
+                fact, dim, [("c_nationkey", "n_nationkey")], broadcast=False
+            )
+
+        t = time_query(spark, build, runs)
         # noop write finalizes its own AQE plan; confirm via a collected run
+        out = build()
         out.collect()
         plan = out._jdf.queryExecution().executedPlan().toString()
         return {
             "rows": n,
-            "sec": round(statistics.median(ts), 4),
+            "sec": t["sec"],
             "skew_split_engaged": "SortMergeJoin(skew=true)" in plan,
         }
     finally:
@@ -535,49 +524,14 @@ def main() -> int:
     # also the first timed query, so its measurement follows its own warm-up)
     force(next(iter(qs.values()))(spark, sf_dir))
 
-    # queries whose CONSTRUCTION executes Spark jobs (checkpointed scalar
-    # passes, snapshot-table builds): timing executions of a prebuilt plan
-    # would silently exclude most of their work, so these rebuild per run
-    BUILD_EXECUTES = {
-        "column_stats_lineitem",
-        "images_stats_profile",
-        "images_checkpoint_resume",
-        # the suggest family profiles at plan-build time (driver-side
-        # collect) and returns a tiny local frame — timing only the
-        # prebuilt plan would measure a createDataFrame, not the profiling
-        "suggested_spec_lineitem",
-        "spec_constraint_drift",
-        # streaming queries stage + DRAIN the whole stream inside the
-        # query fn and return a detached local frame — timing the prebuilt
-        # result measured a local collect, not the stream (round-5 honesty
-        # fix; r4 and earlier under-reported these)
-        "streaming_windowed_verdicts",
-        "streaming_dedup_firstseen",
-        "streaming_decontamination",
-        "streaming_windowed_drift",
-        "streaming_metrics_chart",
-        # bloom builds/probes via localCheckpoint at plan build; the
-        # robust-outlier passes of the localization profile do too
-        "bloom_incremental_dedup",
-        "per_group_localization_profile",
-        # the merged recall query now collects the IVF training sample
-        # and runs driver-side k-means at plan build
-        "ann_recall_floor",
-    }
-
     timings: dict[str, float] = {}
     spreads: dict[str, dict] = {}
+    phases: dict[str, dict] = {}
     for name, fn in qs.items():
-        if name in BUILD_EXECUTES:
-            timings[name], spreads[name] = measure_callable(
-                lambda fn=fn: force(fn(spark, sf_dir)), args.runs
-            )
-            continue
-        # build the plan ONCE per query (driver-side spec-compile + Catalyst
-        # analysis is a per-query constant, irrelevant at the target scale);
-        # time the forced end-to-end EXECUTIONS, median-of-N with spread
-        df = fn(spark, sf_dir)
-        timings[name], spreads[name] = measure(df, args.runs)
+        t = time_query(spark, lambda fn=fn: fn(spark, sf_dir), args.runs)
+        timings[name] = t["sec"]
+        spreads[name] = {k: t[k] for k in ("min", "max", "n")}
+        phases[name] = {k: t[k] for k in ("build_s", "exec_s")}
 
     # north metric: validated rows/sec on the image-table all-constraints job
     flagship = timings["images_validate_all_constraints"]
@@ -591,14 +545,14 @@ def main() -> int:
     if not args.images_only and os.environ.get("SPARK_GRAFT_BENCH_LARGE", "1") != "0":
         lpath = os.path.join(IMAGES_CACHE, f"images_n{SCALING_N}")
         if os.path.exists(os.path.join(lpath, "_SUCCESS")):
-            ldf = images_flagship(spark, lpath)
-            force(ldf)  # warm
-            lmed, lspread = measure(ldf, args.runs)
+            force(images_flagship(spark, lpath))  # warm
+            t = time_query(spark, lambda: images_flagship(spark, lpath), args.runs)
             large = {
                 "rows": SCALING_N,
-                "sec": lmed,
-                "rows_per_sec": round(SCALING_N / lmed, 1),
-                "spread": lspread,
+                "sec": t["sec"],
+                "rows_per_sec": round(SCALING_N / t["sec"], 1),
+                "spread": {k: t[k] for k in ("min", "max", "n")},
+                "phases": {k: t[k] for k in ("build_s", "exec_s")},
             }
 
     ref_skew = None
@@ -620,6 +574,7 @@ def main() -> int:
         "unit": "rows/sec",
         "queries": timings,
         "spread": spreads,
+        "phases": phases,
         "sf": sf,
         "cpus": args.cpus,
         "total_sec": round(sum(timings.values()), 3),
@@ -647,6 +602,7 @@ def main() -> int:
         "value": rows_per_sec,
         "unit": "rows/sec",
         "queries": {"images_validate_all_constraints": flagship},
+        "flagship_phases": phases["images_validate_all_constraints"],
         "n_queries": len(timings),
         "queries_detail": "BENCH_DETAIL.json",
         "sf": sf,

@@ -18,6 +18,8 @@ Scale design:
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -100,27 +102,22 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     )
 
 
-def minhash_signature(shingles: Column, n_hashes: int = 64) -> Column:
-    """MinHash signature as a single Column: for seed s, min over shingles
-    of xxhash64(shingle, s). Array algebra; fine for FEW hashes. For the
-    64-hash production path use :func:`minhash_signatures` — this per-row
-    form evaluates n_hashes passes over the shingle array per row, which
-    blows past the codegen method-size limit and drops whole queries into
-    interpreted mode (measured 30× slowdown).
-
-    NOTE: higher-order-function lambdas must be unary — PySpark binds a
-    2-arg lambda as (element, index) — so seeds are captured via a closure
-    factory, never default args."""
-
-    def _hash_with_seed(s: int):
-        return lambda sh: F.xxhash64(sh, F.lit(s))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, _hash_with_seed(s)))
-            for s in range(n_hashes)
-        ]
-    )
+def py_word_shingles(text: str, k: int = 3) -> list[str]:
+    """Pure-Python :func:`word_shingles` for row-at-a-time callers (the
+    streaming decontamination twin): distinct k-word shingles of the
+    canonicalized text in first-seen order; whole text when the doc has
+    fewer than k tokens. The canonicalization is exact to :func:`_norm`:
+    Spark's ``trim`` strips 0x20 only (NOT tabs/newlines — those collapse
+    to a single space, leaving an empty leading/trailing token) and Java
+    ``\\s`` is ASCII-only; a ``.strip()``-based twin silently diverges on
+    tab-led documents."""
+    toks = re.sub(r"\s+", " ", text.strip(" ").lower(), flags=re.ASCII).split(" ")
+    n = len(toks)
+    if n < k:
+        out = [" ".join(toks)]
+    else:
+        out = [" ".join(toks[i : i + k]) for i in range(n - k + 1)]
+    return list(dict.fromkeys(out))
 
 
 def minhash_signatures(

@@ -1,18 +1,25 @@
-"""Distribution-drift tests: KS statistic and PSI over histograms.
+"""Distribution-drift tests over histograms.
 
 North rule: "KS/PSI distribution-drift tests on w/h/phash histograms".
 Implementation is pure DataFrame algebra (SURVEY.md §2.5):
 
 1. bucketize both sides with the SAME fixed bucket edges
    (``width_bucket`` — deterministic, no sampling),
-2. one ``groupBy(bucket).count()`` per side (map-side partial agg; the
-   shuffle moves only n_buckets rows),
-3. KS = max |cdf_a - cdf_b| via a cumulative-sum window over buckets
-   (n_buckets rows — trivially cheap),
-4. PSI = Σ (p−q)·ln(p/q) with ε-smoothing for empty buckets.
+2. one ``groupBy(key, bucket).count()`` per side for ALL columns (or
+   groups) at once (map-side partial agg; the shuffle moves only
+   n_keys × n_buckets rows),
+3. KS = max |cdf_a - cdf_b| via a cumulative-sum window over buckets,
+   PSI = Σ (p−q)·ln(p/q) with ε-smoothing for empty buckets, plus JS
+   divergence and EMD — all in :func:`_reduce_distribution_stats`, the
+   one implementation behind :func:`drift_metrics` (per column) and
+   :func:`drift_by_group` (per group).
+
+Categorical columns get contingency-table statistics instead
+(:func:`categorical_drift_metrics`: chi2, Cramér's V, TVD).
 
 At 100 TB each side costs one scan; everything after the first groupBy
-operates on ≤ n_buckets rows.
+operates on ≤ n_keys × (n_buckets+2) rows. :func:`histogram` is the
+single-column histogram the streaming drift twin compares against.
 """
 
 from __future__ import annotations
@@ -43,104 +50,6 @@ def histogram(
     )
 
 
-def _with_share(hist: DataFrame, suffix: str) -> DataFrame:
-    total = Window.partitionBy()
-    return hist.select(
-        "bucket", (F.col("n") / F.sum("n").over(total)).alias(f"share_{suffix}")
-    )
-
-
-def ks_statistic(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    column: str,
-    lo: float,
-    hi: float,
-    n_buckets: int = 200,
-) -> DataFrame:
-    """Two-sample KS statistic on bucketized data.
-
-    Output: one row ``column, ks``. Exact up to bucket resolution (both
-    sides share edges, so bucketization error cancels in the sup-norm up to
-    1/n_buckets).
-    """
-    ha = _with_share(histogram(df_a, column, lo, hi, n_buckets), "a")
-    hb = _with_share(histogram(df_b, column, lo, hi, n_buckets), "b")
-    joined = ha.join(hb, "bucket", "full_outer").select(
-        F.col("bucket"),
-        F.coalesce("share_a", F.lit(0.0)).alias("pa"),
-        F.coalesce("share_b", F.lit(0.0)).alias("pb"),
-    )
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cdf = joined.select(
-        F.sum("pa").over(w).alias("cdf_a"), F.sum("pb").over(w).alias("cdf_b")
-    )
-    return cdf.agg(
-        F.max(F.abs(F.col("cdf_a") - F.col("cdf_b"))).alias("ks")
-    ).select(F.lit(column).alias("column"), F.round(F.col("ks"), 9).alias("ks"))
-
-
-def psi(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    column: str,
-    lo: float,
-    hi: float,
-    n_buckets: int = 20,
-    eps: float = 1e-6,
-) -> DataFrame:
-    """Population Stability Index between baseline (a) and current (b).
-
-    Output: one row ``column, psi``. Convention: <0.1 stable, 0.1-0.25
-    moderate drift, >0.25 drifted.
-    """
-    ha = _with_share(histogram(df_a, column, lo, hi, n_buckets), "a")
-    hb = _with_share(histogram(df_b, column, lo, hi, n_buckets), "b")
-    joined = ha.join(hb, "bucket", "full_outer").select(
-        F.greatest(F.coalesce("share_a", F.lit(0.0)), F.lit(eps)).alias("pa"),
-        F.greatest(F.coalesce("share_b", F.lit(0.0)), F.lit(eps)).alias("pb"),
-    )
-    return joined.agg(
-        F.round(F.sum((F.col("pa") - F.col("pb")) * F.log(F.col("pa") / F.col("pb"))), 9).alias(
-            "psi"
-        )
-    ).select(F.lit(column).alias("column"), "psi")
-
-
-def js_divergence(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    column: str,
-    lo: float,
-    hi: float,
-    n_buckets: int = 20,
-) -> DataFrame:
-    """Jensen–Shannon divergence between bucketized distributions.
-
-    Output: one row ``column, js``. Symmetric and finite even on disjoint
-    support (each zero-share term contributes 0, so no ε-smoothing is
-    needed, unlike PSI); natural-log convention, bounded by ln 2. Same
-    plan shape as :func:`psi` — one scan per side, everything downstream on
-    ≤ n_buckets rows.
-    """
-    ha = _with_share(histogram(df_a, column, lo, hi, n_buckets), "a")
-    hb = _with_share(histogram(df_b, column, lo, hi, n_buckets), "b")
-    joined = ha.join(hb, "bucket", "full_outer").select(
-        F.coalesce("share_a", F.lit(0.0)).alias("pa"),
-        F.coalesce("share_b", F.lit(0.0)).alias("pb"),
-    )
-    m = (F.col("pa") + F.col("pb")) / 2
-    term_a = F.when(F.col("pa") > 0, F.col("pa") * F.log(F.col("pa") / m)).otherwise(
-        F.lit(0.0)
-    )
-    term_b = F.when(F.col("pb") > 0, F.col("pb") * F.log(F.col("pb") / m)).otherwise(
-        F.lit(0.0)
-    )
-    return joined.agg(
-        F.round(0.5 * F.sum(term_a) + 0.5 * F.sum(term_b), 9).alias("js")
-    ).select(F.lit(column).alias("column"), "js")
-
-
 def drift_metrics(
     df_a: DataFrame,
     df_b: DataFrame,
@@ -153,9 +62,9 @@ def drift_metrics(
 ) -> DataFrame:
     """KS, PSI **and** JS divergence for MANY columns in ONE scan per table.
 
-    The naive composition (``ks_statistic`` + ``psi`` per column) costs
-    2 × n_columns scans per table; at 100 TB that multiplies the dominant
-    cost. Here each table is scanned once: every row explodes into
+    A per-column composition costs 2 × n_columns scans per table; at
+    100 TB that multiplies the dominant cost. Here each table is scanned
+    once: every row explodes into
     (column, bucket) pairs (cheap — column pruning keeps only the drift
     columns), one groupBy builds ALL histograms, and everything downstream
     operates on ≤ n_columns × (n_buckets+2) rows.
@@ -366,27 +275,6 @@ def drift_by_group(
     )
 
 
-def drift_verdict(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    column: str,
-    lo: float,
-    hi: float,
-    ks_threshold: float = 0.1,
-    psi_threshold: float = 0.25,
-    n_buckets: int = 200,
-) -> DataFrame:
-    """Combined verdict row: ``rule_id, ks, psi, pass``."""
-    k = ks_statistic(df_a, df_b, column, lo, hi, n_buckets).select("ks")
-    p = psi(df_a, df_b, column, lo, hi, min(n_buckets, 20)).select("psi")
-    return k.crossJoin(p).select(
-        F.lit(f"drift:{column}").alias("rule_id"),
-        "ks",
-        "psi",
-        ((F.col("ks") <= ks_threshold) & (F.col("psi") <= psi_threshold)).alias("pass"),
-    )
-
-
 def categorical_drift(
     df_a: DataFrame,
     df_b: DataFrame,
@@ -397,9 +285,9 @@ def categorical_drift(
     effect size, and total-variation distance over the category
     histograms.
 
-    The numeric family (:func:`ks_statistic`/:func:`psi`/
-    :func:`js_divergence`) bucketizes a continuous range; categories have
-    no order, so the right statistics are contingency-table ones:
+    The numeric family (:func:`drift_metrics`: KS/PSI/JS/EMD) bucketizes
+    a continuous range; categories have no order, so the right statistics
+    are contingency-table ones:
 
     - ``chi2`` = Σ over categories and both sides of (observed −
       expected)²/expected, expected under homogeneity ``E = row_total ×

@@ -13,8 +13,8 @@ tested).
 
 Scale notes:
 - batch size is bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``
-  (set in session.py) so multi-MB payload batches can't blow executor
-  memory (SURVEY.md §4.3 item 4).
+  so multi-MB payload batches can't blow executor memory (SURVEY.md §4.3
+  item 4).
 - only the columns the check needs are selected BEFORE the UDF so the scan
   prunes everything else; the 100 TB ``bytes`` column is read exactly once.
 """
@@ -88,51 +88,64 @@ def decode_profile(df: DataFrame, id_col: str = "image_id", bytes_col: str = "by
     return sel.mapInPandas(run, schema=DECODE_SCHEMA)
 
 
-def _decode_with_declared(sel: DataFrame) -> DataFrame:
-    """Single-pass decode that carries the declared dims through the Arrow
-    batch — no join back against the fact table (a join would both shuffle
-    the 100 TB table AND cross-match duplicated image_ids)."""
+VIOLATION_SCHEMA = (
+    "image_id string, path string, message string, value string, "
+    "tag string, param string"
+)
+
+
+def _invariant_violations(ids, payloads, declared_w, declared_h) -> pd.DataFrame:
+    """The image invariants, written once for both decode paths: one
+    violation row per failed check, in the engine's ``(image_id, path,
+    message, value, tag, param)`` shape; rows that pass emit nothing.
+
+    - tag ``required``: payload is null (rule.go:100 — a missing payload is
+      a ``required`` violation, not a decode failure; the reference skips
+      other keywords on absent values)
+    - tag ``decode``:   payload fails to decode (truncated/corrupt)
+    - tag ``dims``:     decoded (w, h) != declared (w, h); skipped when
+      either declared dimension is null
+
+    ``payloads`` yields bytes-like objects or None; ``declared_w``/``_h``
+    are numeric with NaN or None for null.
+    """
     from jsonschema_validator_spark.sources.codecs import decode_image
 
-    schema = (
-        "image_id string, decode_ok boolean, payload_null boolean, "
-        "dec_w int, dec_h int, decode_error string, _w int, _h int"
+    dws = np.asarray(declared_w, dtype=np.float64)
+    dhs = np.asarray(declared_h, dtype=np.float64)
+    out_ids, messages, tags = [], [], []
+    for i, (image_id, data) in enumerate(zip(ids, payloads)):
+        if data is None:
+            message, tag = "required property 'bytes' is missing", "required"
+        else:
+            try:
+                h, w, _ = decode_image(data).shape
+            except Exception as exc:  # noqa: BLE001 - decode must never kill the job
+                message = f"image payload failed to decode: {str(exc)[:200]}"
+                tag = "decode"
+            else:
+                dw, dh = dws[i], dhs[i]
+                if np.isnan(dw) or np.isnan(dh) or (int(dw) == w and int(dh) == h):
+                    continue
+                message = (
+                    f"decoded dimensions {w}x{h} do not match "
+                    f"declared {int(dw)}x{int(dh)}"
+                )
+                tag = "dims"
+        out_ids.append(image_id)
+        messages.append(message)
+        tags.append(tag)
+    return pd.DataFrame(
+        {
+            "image_id": out_ids,
+            "path": "$.bytes",
+            "message": messages,
+            "value": None,
+            "tag": tags,
+            "param": "",
+        },
+        columns=["image_id", "path", "message", "value", "tag", "param"],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ok, nul, dw, dh, err = [], [], [], [], []
-            for data in b["bytes"]:
-                nul.append(data is None)
-                try:
-                    px = decode_image(bytes(data) if data is not None else None)
-                    h, w, _ = px.shape
-                    ok.append(True)
-                    dw.append(w)
-                    dh.append(h)
-                    err.append(None)
-                except Exception as exc:  # noqa: BLE001
-                    ok.append(False)
-                    dw.append(None)
-                    dh.append(None)
-                    err.append(str(exc)[:200])
-            out = pd.DataFrame(
-                {
-                    "image_id": b["image_id"],
-                    "decode_ok": ok,
-                    "payload_null": nul,
-                    "dec_w": dw,
-                    "dec_h": dh,
-                    "decode_error": err,
-                    "_w": b["_w"],
-                    "_h": b["_h"],
-                }
-            )
-            for c in ("dec_w", "dec_h", "_w", "_h"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return sel.mapInPandas(run, schema=schema)
 
 
 def image_invariant_violations(
@@ -142,70 +155,23 @@ def image_invariant_violations(
     w_col: str = "w",
     h_col: str = "h",
 ) -> DataFrame:
-    """Violation rows for the image invariants, in the engine's
-    ``(path, message, value, tag, param)`` shape:
-
-    - tag ``decode``: payload fails to decode (truncated/corrupt)
-    - tag ``dims``:   decoded (w, h) != declared (w, h)
-    """
+    """Violation rows for the image invariants (:func:`_invariant_violations`)
+    with the payloads piped through the Arrow channel. The declared dims
+    ride in the same batch — no join back against the fact table (a join
+    would both shuffle the 100 TB table AND cross-match duplicated
+    image_ids) — and only violation rows travel back to the JVM."""
     sel = df.select(
         F.col(id_col).alias("image_id"),
         F.col(bytes_col).alias("bytes"),
-        F.col(w_col).alias("_w"),
-        F.col(h_col).alias("_h"),
+        F.col(w_col).alias("w"),
+        F.col(h_col).alias("h"),
     )
-    j = _decode_with_declared(sel)
-    # BOTH violation kinds from ONE pass over the decode output: a unionAll
-    # of two filters would execute the decode UDF twice (each union branch
-    # is its own subtree — Spark does not share the common scan+UDF)
-    decode_struct = F.struct(
-        F.lit("$.bytes").alias("path"),
-        F.concat(
-            F.lit("image payload failed to decode: "), F.col("decode_error")
-        ).alias("message"),
-        F.lit(None).cast("string").alias("value"),
-        F.lit("decode").alias("tag"),
-        F.lit("").alias("param"),
-    )
-    dims_struct = F.struct(
-        F.lit("$.bytes").alias("path"),
-        F.format_string(
-            "decoded dimensions %dx%d do not match declared %dx%d",
-            F.col("dec_w"),
-            F.col("dec_h"),
-            F.col("_w"),
-            F.col("_h"),
-        ).alias("message"),
-        F.lit(None).cast("string").alias("value"),
-        F.lit("dims").alias("tag"),
-        F.lit("").alias("param"),
-    )
-    required_struct = F.struct(
-        F.lit("$.bytes").alias("path"),
-        # rule.go:100 — a missing payload is a `required` violation, not a
-        # decode failure (the reference skips other keywords on absent values)
-        F.lit("required property 'bytes' is missing").alias("message"),
-        F.lit(None).cast("string").alias("value"),
-        F.lit("required").alias("tag"),
-        F.lit("").alias("param"),
-    )
-    dims_bad = (
-        F.col("decode_ok")
-        & F.col("_w").isNotNull()
-        & F.col("_h").isNotNull()
-        & ((F.col("dec_w") != F.col("_w")) | (F.col("dec_h") != F.col("_h")))
-    )
-    arr = F.filter(
-        F.array(
-            F.when(F.col("payload_null"), required_struct),
-            F.when(~F.col("payload_null") & ~F.col("decode_ok"), decode_struct),
-            F.when(dims_bad, dims_struct),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    return j.select("image_id", F.explode(arr).alias("_v")).select(
-        "image_id", "_v.path", "_v.message", "_v.value", "_v.tag", "_v.param"
-    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            yield _invariant_violations(b["image_id"], b["bytes"], b["w"], b["h"])
+
+    return sel.mapInPandas(run, schema=VIOLATION_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -224,17 +190,15 @@ def image_invariant_violations(
 # file list would come from the table's manifest (Iceberg data files).
 
 
-def _file_units(spark, path: str, files_per_task: int = 1) -> "DataFrame":
+def _file_units(spark, path: str) -> "DataFrame":
     import glob as _glob
 
     files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
     if not files:
         raise ValueError(f"no parquet files under {path}")
-    units = [
-        (files[i : i + files_per_task],)
-        for i in range(0, len(files), files_per_task)
-    ]
-    return spark.createDataFrame(units, "files array<string>").repartition(len(units))
+    return spark.createDataFrame([(f,) for f in files], "file string").repartition(
+        len(files)
+    )
 
 
 def _iter_binary_rows(table, bytes_col: str):
@@ -285,75 +249,26 @@ def image_invariant_violations_files(
     bytes_col: str = "bytes",
     w_col: str = "w",
     h_col: str = "h",
-    files_per_task: int = 1,
 ) -> DataFrame:
     """Same output as :func:`image_invariant_violations`, but each Spark
-    task reads its parquet files directly with pyarrow (see module note)."""
+    task reads one parquet file directly with pyarrow (see module note)."""
     import pyarrow.parquet as pq
 
-    from jsonschema_validator_spark.sources.codecs import decode_image
-
-    units = _file_units(spark, path, files_per_task)
+    units = _file_units(spark, path)
     cols = [id_col, bytes_col, w_col, h_col]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            rows: dict = {
-                "image_id": [], "path": [], "message": [],
-                "value": [], "tag": [], "param": [],
-            }
-            for files in b["files"]:
-                for f in files:
-                    t = pq.read_table(f, columns=cols, use_threads=False)
-                    ids = t.column(id_col)
-                    ws = t.column(w_col).to_numpy(zero_copy_only=False)
-                    hs = t.column(h_col).to_numpy(zero_copy_only=False)
-                    for i, mv in _iter_binary_rows(t, bytes_col):
-                        if mv is None:
-                            rows["image_id"].append(ids[i].as_py())
-                            rows["path"].append("$.bytes")
-                            rows["message"].append(
-                                "required property 'bytes' is missing"
-                            )
-                            rows["value"].append(None)
-                            rows["tag"].append("required")
-                            rows["param"].append("")
-                            continue
-                        try:
-                            px = decode_image(mv)
-                        except Exception as exc:  # noqa: BLE001 - decode must never kill the job (parity with the channel path)
-                            rows["image_id"].append(ids[i].as_py())
-                            rows["path"].append("$.bytes")
-                            rows["message"].append(
-                                f"image payload failed to decode: {str(exc)[:200]}"
-                            )
-                            rows["value"].append(None)
-                            rows["tag"].append("decode")
-                            rows["param"].append("")
-                            continue
-                        h, w, _ = px.shape
-                        dw, dh = ws[i], hs[i]
-                        if (
-                            not np.isnan(dw)
-                            and not np.isnan(dh)
-                            and (int(dw) != w or int(dh) != h)
-                        ):
-                            rows["image_id"].append(ids[i].as_py())
-                            rows["path"].append("$.bytes")
-                            rows["message"].append(
-                                f"decoded dimensions {w}x{h} do not match "
-                                f"declared {int(dw)}x{int(dh)}"
-                            )
-                            rows["value"].append(None)
-                            rows["tag"].append("dims")
-                            rows["param"].append("")
-            yield pd.DataFrame(rows)
+            for f in b["file"]:
+                t = pq.read_table(f, columns=cols, use_threads=False)
+                yield _invariant_violations(
+                    t.column(id_col).to_pylist(),
+                    (mv for _, mv in _iter_binary_rows(t, bytes_col)),
+                    t.column(w_col).to_numpy(zero_copy_only=False),
+                    t.column(h_col).to_numpy(zero_copy_only=False),
+                )
 
-    schema = (
-        "image_id string, path string, message string, value string, "
-        "tag string, param string"
-    )
-    return units.mapInPandas(run, schema=schema)
+    return units.mapInPandas(run, schema=VIOLATION_SCHEMA)
 
 
 def caption_equality_violations(
@@ -403,11 +318,7 @@ def caption_equality_violations(
             )
             yield out
 
-    schema = (
-        "image_id string, path string, message string, value string, "
-        "tag string, param string"
-    )
-    return sel.mapInPandas(run, schema=schema)
+    return sel.mapInPandas(run, schema=VIOLATION_SCHEMA)
 
 
 def psnr_vs_reference(

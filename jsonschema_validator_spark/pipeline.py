@@ -173,9 +173,10 @@ class ImageValidationSuite:
 
     def decode_verdict(self) -> DataFrame:
         """Decode + dims invariants collapsed to verdict counts (one Arrow
-        pass over bytes; violations themselves via `decode_violations`)."""
+        pass over bytes; violations themselves via `decode_violations`).
+        Lazy: the row count is a one-row aggregate joined into the plan,
+        so building the verdict starts no Spark job."""
         viol = self.decode_violations()
-        n = self._meta.count()
         rules = [("image:decode", "decode"), ("image:dims", "dims")]
         if self._bytes_required:
             rules.insert(0, ("required:$.bytes", "required"))
@@ -185,7 +186,7 @@ class ImageValidationSuite:
                 F.sum((F.col("tag") == t).cast("long")).alias(f"_c{i}")
                 for i, (_, t) in enumerate(rules)
             ]
-        )
+        ).crossJoin(self._meta.agg(F.count(F.lit(1)).alias("n_checked")))
         entries = [
             F.struct(
                 F.lit(rid).alias("rule_id"),
@@ -193,9 +194,9 @@ class ImageValidationSuite:
             )
             for i, (rid, _) in enumerate(rules)
         ]
-        return agg.select(F.explode(F.array(*entries)).alias("_v")).select(
+        return agg.select("n_checked", F.explode(F.array(*entries)).alias("_v")).select(
             F.col("_v.rule_id").alias("rule_id"),
-            F.lit(n).alias("n_checked"),
+            "n_checked",
             F.col("_v.n_failed").alias("n_failed"),
             (F.col("_v.n_failed") == 0).alias("pass"),
         )

@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jsonschema_validator_spark.operators.dedup import word_shingles
+from jsonschema_validator_spark.operators.dedup import py_word_shingles, word_shingles
 
 _SIX_DP = Decimal("0.000001")
 
@@ -50,17 +50,11 @@ def _round6(x: float) -> float:
 
 def _py_shingles(text: str, k: int) -> set:
     """Pure-Python twin of operators.dedup.word_shingles (distinct k-word
-    shingles of the canonicalized text; whole text when < k tokens).
-
-    Delegates to oracle._word_shingles, which replicates the JVM
-    canonicalization EXACTLY: Spark's ``trim`` strips 0x20 only (NOT tabs/
-    newlines — those collapse to a single space, leaving an empty leading/
-    trailing token) and Java ``\\s`` is ASCII-only. A ``.strip()``-based
-    twin silently diverges on tab-led documents (caught by
+    shingles of the canonicalized text; whole text when < k tokens) —
+    :func:`operators.dedup.py_word_shingles`, which replicates the JVM
+    canonicalization exactly (pinned by
     test_py_shingles_matches_jvm_word_shingles)."""
-    from jsonschema_validator_spark.oracle import _word_shingles
-
-    return set(_word_shingles(text, k))
+    return set(py_word_shingles(text, k))
 
 
 def benchmark_shingle_set(

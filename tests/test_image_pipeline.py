@@ -110,16 +110,68 @@ def test_suite_shape(suite):
     assert fams == {"keyword", "uniqueness", "referential", "drift", "image"}
 
 
-def test_direct_read_decode_matches_channel(spark, tmp_path):
+def _write_synth(spark, path):
+    """The synth corpus; its violation counts are pinned by the family
+    tests, so no expected rows here."""
+    synth.generate_spark(spark, 2000, seed=42, partitions=4).write.parquet(path)
+
+
+def _write_edge_cases(spark, path):
+    """One file, one row per invariant branch: clean, null payload,
+    truncated payload, dims mismatch, and a null declared width or height
+    (dims check skipped)."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from jsonschema_validator_spark.sources.codecs import encode_png
+
+    png = encode_png(np.zeros((3, 4, 3), dtype=np.uint8))  # 4 wide, 3 high
+    rows = [
+        ("img-ok", png, 4, 3),
+        ("img-null", None, 4, 3),
+        ("img-trunc", png[:20], 4, 3),
+        ("img-dims", png, 5, 3),
+        ("img-nodims-w", png, None, 9),
+        ("img-nodims-h", png, 5, None),
+    ]
+    os.makedirs(path)
+    pq.write_table(
+        pa.table(
+            {
+                "image_id": pa.array([r[0] for r in rows]),
+                "bytes": pa.array([r[1] for r in rows], type=pa.binary()),
+                "w": pa.array([r[2] for r in rows], type=pa.int32()),
+                "h": pa.array([r[3] for r in rows], type=pa.int32()),
+            }
+        ),
+        os.path.join(path, "part-0.parquet"),
+    )
+    # (image_id, tag, a fragment of the message the row must carry)
+    return [
+        ("img-dims", "dims", "4x3"),
+        ("img-dims", "dims", "declared 5x3"),
+        ("img-null", "required", "'bytes'"),
+        ("img-trunc", "decode", "corrupt payload"),
+    ]
+
+
+@pytest.mark.parametrize(
+    "write", [_write_synth, _write_edge_cases], ids=["synth", "edge_cases"]
+)
+def test_direct_read_decode_matches_channel(spark, tmp_path, write):
     """The direct-parquet-read decode (scale path) must emit EXACTLY the
-    violations of the Arrow-channel version."""
+    violations of the Arrow-channel version — on the synth corpus and on
+    a hand-written file that reaches every branch of the shared kernel."""
     from jsonschema_validator_spark.operators.multimodal import (
         image_invariant_violations,
         image_invariant_violations_files,
     )
 
     p = str(tmp_path / "imgs")
-    synth.generate_spark(spark, 2000, seed=42, partitions=4).write.parquet(p)
+    expected = write(spark, p)
     df = spark.read.parquet(p)
     a = sorted(
         (r["image_id"], r["tag"], r["message"])
@@ -131,6 +183,38 @@ def test_direct_read_decode_matches_channel(spark, tmp_path):
     )
     assert a == b
     assert len(a) > 0
+    if expected is not None:
+        assert sorted({(i, t) for i, t, _ in expected}) == [(i, t) for i, t, _ in a]
+        msg = {i: m for i, _, m in a}
+        for i, _, fragment in expected:
+            assert fragment in msg[i], (i, msg[i])
+
+
+def test_suite_build_starts_no_spark_job(spark, tmp_path, verdict_map):
+    """Building the flagship suite (metadata cache on, direct-read decode)
+    is lazy: no Spark job runs until the verdicts are forced, and the
+    forced verdicts equal the uncached channel-path suite's."""
+    p = str(tmp_path / "imgs")
+    synth.generate_spark(spark, N, seed=42, partitions=8).write.parquet(p)
+    df = spark.read.parquet(p)
+    dim = synth.dim_formats(spark)
+    sc = spark.sparkContext
+    group = "test-suite-build"
+    sc.setJobGroup(group, "ImageValidationSuite build only")
+    try:
+        suite = ImageValidationSuite(
+            df, dim_formats=dim, baseline=df, source_path=p, cache_metadata=True
+        )
+        verdicts = suite.suite_verdicts()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    try:
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        got = {r["rule_id"]: r.asDict() for r in verdicts.collect()}
+        assert got == verdict_map
+    finally:
+        spark.catalog.clearCache()
 
 
 def test_iter_binary_rows_sliced_and_large_binary():
